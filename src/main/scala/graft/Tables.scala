@@ -1,7 +1,12 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.types.{DecimalType, LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{DecimalType, LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Central table loader (SURVEY.md §7.1 M0).
   *
@@ -13,11 +18,26 @@ import org.apache.spark.sql.types.{DecimalType, LongType, TimestampNTZType, Time
   *  - every table name maps to exactly one path convention
   *    (`<sfDir>/<name>.parquet`), matching TESTDATA.md.
   *
-  * Scale notes (100 TB): the loader deliberately returns plain
-  * `spark.read.parquet` DataFrames — no caching, no repartitioning — so
-  * Catalyst keeps full freedom for predicate pushdown, column pruning and
-  * partition-aware planning. At cluster scale the same code reads a
-  * directory of many files; nothing here assumes a single file.
+  * Schema registry: a plain `spark.read.parquet` launches a Spark job to
+  * infer the schema from the parquet footers, and the same tables are read
+  * again for every query. So each session keeps the schemas it has inferred,
+  * keyed by (qualified path, the parquet confs that change inference), with
+  * the file signature the schema was inferred from: length and modification
+  * time of the file, or of every leaf file of a directory, taken through the
+  * path's Hadoop `FileSystem`. A read whose signature matches reuses the
+  * schema through `spark.read.schema(known)` and launches no job. A changed,
+  * added or removed file, a changed inference conf, or a new session infers
+  * again; a path that cannot be stat'ed is read with plain inference and
+  * never registered. This caches metadata only, as a metastore does: rows,
+  * relations and file listings are never cached, so every read still lists
+  * and scans the files as they are now.
+  *
+  * Scale notes (100 TB): the loader otherwise returns plain parquet
+  * DataFrames — no caching, no repartitioning — so Catalyst keeps full
+  * freedom for predicate pushdown, column pruning and partition-aware
+  * planning. At cluster scale the same code reads a directory of many
+  * files; nothing here assumes a single file. The signature of a
+  * directory lists it once per read, beside Spark's own listing.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -32,15 +52,81 @@ object Tables {
     * arithmetic on the naive value), so no global state such as
     * `spark.sql.session.timeZone` needs mutating here (ADVICE r9 — a
     * loader that resets session confs on every read silently changes
-    * behavior for host code sharing the session). */
+    * behavior for host code sharing the session). The schema comes from
+    * the session's registry when the files are unchanged (see above). */
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // session-scoped optimizer rules (idempotent): every query reads its
     // inputs through here, so a driver-provided session gets the scale
     // governors (SimilarityBandRewrite et al.) without GraftExtensions
     graft.plans.GraftRules.install(spark)
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    parquet(spark, s"$sfDir/$name.parquet")
   }
+
+  /** Session confs that change what parquet schema inference returns; read
+    * at lookup time, so toggling one infers again. */
+  private val inferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema")
+
+  /** A registered schema and the file signature it was inferred from. */
+  private final case class Known(signature: Seq[(String, Long, Long)], schema: StructType)
+
+  /** One registry per session, weakly held: sessions never share an entry,
+    * and a dropped session's schemas go with it. */
+  private val registries =
+    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[(String, Seq[String]), Known]]()
+
+  private def registryOf(spark: SparkSession) = registries.synchronized {
+    registries.computeIfAbsent(spark, _ => new ConcurrentHashMap())
+  }
+
+  /** `spark.read.parquet(path)`, minus the inference job when the session
+    * already inferred this path's schema from the same files under the same
+    * confs. The signature is taken BEFORE inferring, so a file that changes
+    * mid-inference leaves a stale signature that the next read re-infers.
+    * Concurrent first reads may each infer; they store the same schema. */
+  private def parquet(spark: SparkSession, path: String): DataFrame =
+    signature(spark, path) match {
+      case None => spark.read.parquet(path)
+      case Some((qualified, sig)) =>
+        val key = qualified -> inferenceConfs.map(k => spark.conf.getOption(k).orNull)
+        val registry = registryOf(spark)
+        Option(registry.get(key)).filter(_.signature == sig) match {
+          case Some(known) => spark.read.schema(known.schema).parquet(path)
+          case None =>
+            val df = spark.read.parquet(path)
+            registry.put(key, Known(sig, df.schema))
+            df
+        }
+    }
+
+  /** (qualified path, sorted (relative leaf path, length, mtime) of every
+    * leaf file) through the path's Hadoop FileSystem; None when the path
+    * cannot be stat'ed or listed. */
+  private def signature(spark: SparkSession,
+      path: String): Option[(String, Seq[(String, Long, Long)])] =
+    try {
+      val p = new Path(path)
+      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+      val st = fs.getFileStatus(p)
+      val root = st.getPath.toString
+      val leaves =
+        if (st.isFile) Vector(("", st.getLen, st.getModificationTime))
+        else {
+          val it = fs.listFiles(st.getPath, true)
+          val b = Vector.newBuilder[(String, Long, Long)]
+          while (it.hasNext) {
+            val f = it.next()
+            b += ((f.getPath.toString.stripPrefix(root), f.getLen, f.getModificationTime))
+          }
+          b.result().sortBy(_._1)
+        }
+      Some(root -> leaves)
+    } catch { case NonFatal(_) => None }
 
   /** Canonical events accessor — the ONLY way event-time consumers read
     * the table. The driver has shipped `ts` under two different physical
@@ -165,7 +251,8 @@ object Tables {
 
   /** Check every table under `sfDir` against [[expectedSchemas]]; returns
     * one human-readable message per drifted/missing/extra column (empty =
-    * no drift). Metadata-only — reads parquet footers, never data. */
+    * no drift). Metadata-only — reads parquet footers (or the session's
+    * registered schema), never data. */
   def verifySchemas(spark: SparkSession, sfDir: String): Seq[String] =
     names.flatMap { name =>
       // a MISSING/unreadable table is the loudest drift class of all —

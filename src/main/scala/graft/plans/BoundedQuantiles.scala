@@ -158,9 +158,12 @@ object BoundedQuantiles {
   }
 
   /** Boundedness instrumentation for tests: (max histogram bins held by
-    * any group, rows re-read by pass 2). The first is the widest
-    * aggregate/window state the locate pass can see; the second bounds
-    * pass 2's selection input — both must stay ≪ group cardinality on a
+    * any group, probe-row × target-bin matches). The first is the widest
+    * aggregate/window state the locate pass can see. The second is the
+    * size of pass 2's selection input: one row per (probe row, rank
+    * target) pair whose bins match, so a row in a bin shared by k targets
+    * counts k times. It is not a count of rows re-read — pass 2 scans
+    * every probe row once. Both must stay ≪ group cardinality on a
     * high-distinct corpus (ScalePathSuite asserts it). */
   private[graft] def stateFootprint(
       df: DataFrame,
@@ -172,11 +175,12 @@ object BoundedQuantiles {
     val maxBins = parts.hist.groupBy(parts.g.map(col): _*)
       .agg(count(lit(1)).as("graft_nb"))
       .agg(max("graft_nb")).collect()(0).getLong(0)
-    // pass-2 input bound: probe rows landing in a target's bin (each
-    // target's bin holds ≤ a 1/buckets-ish fraction of its group)
-    val pass2Rows = parts.base.join(broadcast(parts.located), parts.g)
+    // pass-2 selection input: probe rows joined to their group's targets,
+    // kept where the row's bin is the target's (each target's bin holds
+    // ≤ a 1/buckets-ish fraction of its group)
+    val pass2Matches = parts.base.join(broadcast(parts.located), parts.g)
       .filter(binCol(buckets) === col("graft_b")).count()
-    (maxBins, pass2Rows)
+    (maxBins, pass2Matches)
   }
 
   /** The shared locate pass: the null-filtered probe frame, the

@@ -132,8 +132,9 @@ class ScalePathSuite extends AnyFunSuite {
     // 300k ALL-DISTINCT doubles in ONE global group — exactly the shape
     // that grows the builtin percentile's counts-map to |rows| entries
     // (the r4 scale-killer). The bounded plan must instead see: at most
-    // `buckets` histogram bins, and a pass-2 re-read restricted to the
-    // few bins holding the target ranks — orders of magnitude below the
+    // `buckets` histogram bins, and a pass-2 selection input of only the
+    // probe-row × target-bin matches (the rows of the few bins holding
+    // the target ranks, once per target) — orders of magnitude below the
     // group size.
     val n = 300000L
     val df = spark.range(n).toDF("id")
@@ -142,8 +143,8 @@ class ScalePathSuite extends AnyFunSuite {
     val (maxBins, pass2Rows) = graft.plans.BoundedQuantiles
       .stateFootprint(df, Nil, col("v"), ps, buckets = 4096)
     assert(maxBins <= 4096, s"histogram wider than the bucket bound: $maxBins")
-    // ≤ 4 target bins (2 ps × lo/hi) × ~n/4096 rows each on this uniform
-    // corpus; 1% of the group is a generous ceiling
+    // 4 targets (2 ps × lo/hi), each matching the ~n/4096 rows of its
+    // bin on this uniform corpus; 1% of the group is a generous ceiling
     assert(pass2Rows < n / 100,
       s"pass 2 re-read $pass2Rows rows — not a bounded selection")
     // and the bounded plan still returns the builtin's exact values here

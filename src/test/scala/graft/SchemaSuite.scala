@@ -1,5 +1,11 @@
 package graft
 
+import java.nio.file.{Files, StandardCopyOption}
+import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Schema-drift tripwire (VERDICT r8 item 3). The driver regenerates
@@ -86,5 +92,109 @@ class SchemaSuite extends AnyFunSuite {
     val us2100 = 4102444800000000L // 2100-01-01 in µs
     assert(r.getLong(0) >= us2020 && r.getLong(1) <= us2100,
       s"ts_us out of plausible µs range: [${r.getLong(0)}, ${r.getLong(1)}]")
+  }
+
+  /** Spark jobs `f` launches on this thread, counted by a SparkListener.
+    * The listener bus is async: a sentinel job in its own group runs after
+    * `f`, and its arrival guarantees every earlier JobStart was delivered. */
+  private def jobsLaunchedBy(f: => Unit): Int = {
+    val group = s"schema-${java.util.UUID.randomUUID}"
+    val drain = s"$group-drain"
+    val jobs = new AtomicInteger()
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(`drain`) => drained.countDown()
+          case _ =>
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "measured")
+      try f finally sc.clearJobGroup()
+      sc.setJobGroup(drain, "drain")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      assert(drained.await(30, TimeUnit.SECONDS), "listener bus failed to drain in 30 s")
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("schema registry: unchanged table reads launch no job; a rewrite infers again") {
+    val dir = Files.createTempDirectory("graft_schema_registry").toFile
+    val file = new java.io.File(dir, "events.parquet")
+    val other = Files.createTempDirectory("graft_schema_other").toFile
+    try {
+      val fixture = getClass.getResource("/events-us/events.parquet")
+      assert(fixture != null, "missing test fixture events-us/events.parquet")
+      Files.copy(java.nio.file.Paths.get(fixture.toURI), file.toPath)
+      val first = Tables(spark, dir.getPath, "events").schema
+      assert(first.fieldNames.contains("ts"))
+      var second: StructType = null
+      val jobs = jobsLaunchedBy { second = Tables(spark, dir.getPath, "events").schema }
+      assert(jobs == 0, s"a second read of an unchanged table launched $jobs job(s)")
+      assert(second == first)
+
+      // overwrite IN PLACE with a parquet file of another schema, and move
+      // the mtime so the rewrite is visible even at coarse mtime resolution
+      val mtime = file.lastModified()
+      val out = new java.io.File(other, "out").getPath
+      spark.range(3).toDF("rewritten").coalesce(1).write.parquet(out)
+      val part = new java.io.File(out).listFiles().find(_.getName.endsWith(".parquet")).get
+      Files.copy(part.toPath, file.toPath, StandardCopyOption.REPLACE_EXISTING)
+      assert(file.setLastModified(mtime + 10000))
+      val rewritten = Tables(spark, dir.getPath, "events")
+      assert(rewritten.schema.fieldNames.toSeq == Seq("rewritten"),
+        s"stale schema after an in-place rewrite: ${rewritten.schema.simpleString}")
+      assert(rewritten.collect().map(_.getLong(0)).sorted.toSeq == Seq(0L, 1L, 2L))
+
+      assert(file.delete())
+      val drift = Tables.verifySchemas(spark, dir.getPath)
+      assert(drift.exists(_.startsWith("events: TABLE MISSING/UNREADABLE")),
+        s"deleted table not reported: ${drift.mkString("; ")}")
+    } finally {
+      org.apache.commons.io.FileUtils.deleteQuietly(dir)
+      org.apache.commons.io.FileUtils.deleteQuietly(other)
+    }
+  }
+
+  test("schema registry: keyed by the inference confs, one per session, safe for concurrent first reads") {
+    val ntz = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    val before = spark.conf.getOption(ntz)
+    def orderdate(): String = Tables(spark, sf, "orders").schema("o_orderdate").dataType.simpleString
+    try {
+      spark.conf.set(ntz, "true")
+      assert(orderdate() == "timestamp_ntz")
+      spark.conf.set(ntz, "false")
+      assert(orderdate() == "timestamp")
+    } finally before match {
+      case Some(v) => spark.conf.set(ntz, v)
+      case None => spark.conf.unset(ntz)
+    }
+    assert(orderdate() == "timestamp_ntz")
+
+    // another session never sees this session's entries: its first read infers
+    Tables(spark, sf, "region").schema
+    val fresh = spark.newSession()
+    assert(jobsLaunchedBy(Tables(fresh, sf, "region").schema) > 0,
+      "a new session reused another session's registered schema")
+
+    // eight concurrent first reads in a fresh session agree on one schema
+    val session = spark.newSession()
+    val pool = Executors.newFixedThreadPool(8)
+    val start = new CountDownLatch(1)
+    try {
+      val reads = (1 to 8).map { _ =>
+        pool.submit(new Callable[StructType] {
+          def call(): StructType = { start.await(); Tables(session, sf, "lineitem").schema }
+        })
+      }
+      start.countDown()
+      val schemas = reads.map(_.get(60, TimeUnit.SECONDS)).distinct
+      assert(schemas.size == 1, s"concurrent first reads disagree: $schemas")
+      assert(schemas.head == Tables(spark, sf, "lineitem").schema)
+    } finally pool.shutdownNow()
   }
 }
